@@ -4,7 +4,8 @@ capabilities of the reference repo Djak75/tp-airflow-gtfs-snowflake
 analytics), re-expressed Spark-first per SURVEY.md.
 
 Layout:
-  session    - SparkSession factory tuned for local[32] + oracle parity
+  session    - SparkSession factory (local[usable cores]) + oracle
+               parity; concurrent submission of independent actions
   schemas    - explicit StructTypes for every bronze/silver table
   catalog    - parquet warehouse (bronze/silver namespaces), insert_date
   sources/   - CSV-with-options scan, GTFS static zip, GTFS-RT flatten,

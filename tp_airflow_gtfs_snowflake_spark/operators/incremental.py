@@ -6,11 +6,17 @@ reference: every silver load shares
                                    '1900-01-01'::TIMESTAMP_NTZ)
 (dags/gtfs_silver.py:125-213).
 
-Batch mode computes MAX(insert_date) on the destination — a cheap
-parquet-footer-statistics scan — then appends only newer source rows
-(the filter pushes down to the source scan).  Restart safety comes
-from the append-only watermark monotonicity: a crashed run re-appends
-nothing already visible, exactly like the reference.
+Batch mode reads every watermark of a refresh in ONE Spark action —
+MAX(insert_date) of each source and of each existing destination, a
+union of one-row aggregates collected once.  That is a scan of the
+insert_date column (Spark's parquet reader does not answer MAX from
+row-group statistics), but only of that column.  A table is loaded
+only when its source max is strictly above its destination
+watermark, and then in one write job that counts its rows on the way
+(`observability.observed`) — no count() re-scan.  The filter pushes
+down to the source scan.  Restart safety comes from the append-only
+watermark monotonicity: a crashed run re-appends nothing already
+visible, exactly like the reference.
 
 The streaming-native replacement (checkpointed file source, which
 eliminates the destination scan entirely) lives in streaming/.
@@ -19,6 +25,7 @@ eliminates the destination scan entirely) lives in streaming/.
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 from typing import Callable
 
 from pyspark.errors import AnalysisException
@@ -26,18 +33,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.observability import observed
 
 EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
 
+Table = tuple[str, str]  # (layer, name)
 
-def destination_watermark(wh: Warehouse, layer: str, name: str,
-                          col: str = "insert_date") -> dt.datetime:
-    """(SELECT MAX(insert_date) FROM dst) — scalar agg; on parquet this
-    is answered from row-group statistics, not a full scan."""
-    if not wh.exists(layer, name):
-        return EPOCH_FLOOR
-    row = wh.table(layer, name).agg(F.max(col).alias("wm")).collect()[0]
-    return row["wm"] or EPOCH_FLOOR
+
+def max_watermarks(wh: Warehouse,
+                   tables: list[Table]) -> dict[Table, dt.datetime | None]:
+    """MAX(insert_date) of every table in `tables`, in one Spark
+    action: a union of one-row aggregates, collected once.  An empty
+    table maps to None; a missing table raises, as `Warehouse.table`
+    does.  Each aggregate scans the column — parquet row-group
+    statistics are not used."""
+    probes = [wh.table(*t).agg(F.lit(i).alias("i"),
+                               F.max("insert_date").alias("wm"))
+              for i, t in enumerate(tables)]
+    return {tables[r["i"]]: r["wm"]
+            for r in reduce(DataFrame.unionAll, probes).collect()}
 
 
 def incremental_append(
@@ -45,33 +59,34 @@ def incremental_append(
     src: DataFrame,
     dst_name: str,
     transform: Callable[[DataFrame], DataFrame],
+    wm: dt.datetime,
     *,
     dst_layer: str = "silver",
     watermark_col: str = "insert_date",
 ) -> int:
-    """Append transform(src rows newer than dst watermark) to dst.
+    """Append transform(src rows newer than `wm`) to dst in one write
+    job, and return the number of appended rows, counted on that job.
 
-    Returns the number of appended rows.  `transform` is the
-    declarative silver select-list; the watermark filter is applied on
-    the *source* before the transform so Catalyst pushes it into the
+    `wm` is the destination watermark (`max_watermarks`, EPOCH_FLOOR
+    when dst is missing or empty).  `transform` is the declarative
+    silver select-list; the watermark filter is applied on the
+    *source* before the transform so Catalyst pushes it into the
     source scan (partition pruning when src is date-partitioned).
     """
-    wm = destination_watermark(wh, dst_layer, dst_name, watermark_col)
     fresh = src.filter(F.col(watermark_col) > F.lit(wm))
-    out = transform(fresh)
-    n = out.count()
-    if n:
-        # DELIBERATE DEVIATION: carry the BRONZE insert_date into
-        # silver.  The reference's silver INSERTs omit insert_date, so
-        # the column DEFAULT stamps silver-load time
-        # (gtfs_silver.py:126-213) — but then a bronze row committed
-        # between a silver run's watermark read and its insert could be
-        # skipped forever (watermark already advanced past it).  Keying
-        # the watermark on the carried bronze timestamp removes that
-        # missed-row race; consumers reading silver insert_date get
-        # bronze-ingest recency, not silver-load recency.
-        wh.append(dst_layer, dst_name, out, stamp_insert_date=False)
-    return n
+    out, obs = observed(transform(fresh), f"append:{dst_layer}.{dst_name}",
+                        n=F.count(F.lit(1)))
+    # DELIBERATE DEVIATION: carry the BRONZE insert_date into
+    # silver.  The reference's silver INSERTs omit insert_date, so
+    # the column DEFAULT stamps silver-load time
+    # (gtfs_silver.py:126-213) — but then a bronze row committed
+    # between a silver run's watermark read and its insert could be
+    # skipped forever (watermark already advanced past it).  Keying
+    # the watermark on the carried bronze timestamp removes that
+    # missed-row race; consumers reading silver insert_date get
+    # bronze-ingest recency, not silver-load recency.
+    wh.append(dst_layer, dst_name, out, stamp_insert_date=False)
+    return obs.get["n"]
 
 
 def incremental_rollup_refresh(
@@ -92,8 +107,8 @@ def incremental_rollup_refresh(
     row arrived — you re-aggregate the one day it landed in.
 
     Mechanics per refresh:
-    1. watermark = MAX(rollup_watermark) over the rollup (parquet
-       footer stats, no full scan; EPOCH_FLOOR on first build);
+    1. watermark = MAX(rollup_watermark) over the rollup (a scan of
+       that one column; EPOCH_FLOOR on first build);
     2. touched = DISTINCT date_col of source rows with
        watermark_col > watermark — a days-count-bounded list, safe to
        collect (same contract as the scalar watermark read);

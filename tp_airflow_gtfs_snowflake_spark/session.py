@@ -12,18 +12,28 @@ Config choices (scale rationale):
   applied explicitly with convert_timezone in the GTFS layer instead
   of via session state.
 - Arrow on: every Pandas-UDF / toPandas path is Arrow-batched.
+- local[N] defaults to the cores this process may run on
+  (SPARK_GRAFT_CPUS overrides): more task threads than cores only
+  adds context switches.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "tp_airflow_gtfs_snowflake_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+        else os.cpu_count())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -53,3 +63,18 @@ def get_spark(app_name: str = "tp_airflow_gtfs_snowflake_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession,
+                     tasks: list[Callable[[], T]]) -> list[T]:
+    """Run independent Spark actions at once, one pool thread each, so
+    the scheduler overlaps them instead of paying each job's latency in
+    turn.  Every thread takes the caller's local properties and tags
+    (job group, description, scheduler pool), so the jobs stay
+    attributed to whatever group the caller set.  Results come back in
+    task order; once every task has finished, the exception of the
+    first failed task (in task order) is raised here."""
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(task))
+                   for task in tasks]
+        return [f.result() for f in futures]

@@ -8,11 +8,15 @@ declarative select-lists; the loader is operators/incremental.py.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
-from tp_airflow_gtfs_snowflake_spark.operators.incremental import incremental_append
+from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
+    EPOCH_FLOOR, incremental_append, max_watermarks)
+from tp_airflow_gtfs_snowflake_spark.session import run_concurrently
 
 
 def routes_silver(df: DataFrame) -> DataFrame:
@@ -84,13 +88,33 @@ TRANSFORMS = {
 
 
 def refresh_silver(wh: Warehouse) -> dict[str, int]:
-    """The gtfs_silver DAG body: run all seven incremental loads.
-    The reference fans them out in parallel (gtfs_silver.py:307-315);
-    in Spark they are independent jobs — sequential submission is fine
-    locally, a thread pool submits them concurrently on a cluster."""
-    appended = {}
-    for dst, (src_name, transform) in TRANSFORMS.items():
+    """The gtfs_silver DAG body: run all seven incremental loads and
+    return {silver table: appended rows}, in TRANSFORMS order.
+
+    One probe action reads the insert_date watermark of every bronze
+    source and every existing silver table; a missing bronze source
+    raises there, before any load.  The seven loads are then submitted
+    concurrently, as the reference fans them out in parallel
+    (gtfs_silver.py:307-315): a table whose source max is strictly
+    above its watermark (EPOCH_FLOOR when missing or empty) gets one
+    write job that also counts the rows; an up-to-date table gets no
+    job; a silver table that does not exist yet and gets no rows is
+    created empty, so all seven read with their declared schema.  A
+    refresh with nothing new is the probe alone.  A failed load
+    raises; re-running is safe through the watermark."""
+    wms = max_watermarks(
+        wh, [("bronze", src) for src, _ in TRANSFORMS.values()]
+        + [("silver", dst) for dst in TRANSFORMS if wh.exists("silver", dst)])
+
+    def load(dst: str) -> int:
+        src, transform = TRANSFORMS[dst]
+        src_max = wms[("bronze", src)]
+        wm = wms.get(("silver", dst)) or EPOCH_FLOOR
+        if src_max is not None and src_max > wm:
+            return incremental_append(wh, wh.table("bronze", src), dst,
+                                      transform, wm)
         wh.create_if_not_exists("silver", dst)
-        src = wh.table("bronze", src_name)
-        appended[dst] = incremental_append(wh, src, dst, transform)
-    return appended
+        return 0
+
+    return dict(zip(TRANSFORMS, run_concurrently(
+        wh.spark, [partial(load, dst) for dst in TRANSFORMS])))

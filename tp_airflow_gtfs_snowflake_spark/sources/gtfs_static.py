@@ -12,11 +12,15 @@ from __future__ import annotations
 
 import os
 import zipfile
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark import schemas
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.observability import observed
+from tp_airflow_gtfs_snowflake_spark.session import run_concurrently
 from tp_airflow_gtfs_snowflake_spark.sources.csv_source import read_csv
 
 STATIC_FILES = {
@@ -65,12 +69,23 @@ def load_static_table(spark: SparkSession, data_dir: str, table: str) -> DataFra
 
 def ingest_static(spark: SparkSession, data_dir: str, wh: Warehouse) -> dict[str, int]:
     """The gtfs_static_daily pipeline body: land all four static tables
-    in bronze with insert_date stamping."""
+    in bronze with insert_date stamping, and return each table's row
+    count after the load.
+
+    The four loads are submitted concurrently.  Each is one append
+    job that counts the rows it writes (`observability.observed`); the
+    append creates a table that does not exist yet.  Rows already in a
+    table are counted, in one more action, only when the table existed
+    before this call."""
     check_static_files(data_dir)
-    counts = {}
-    for table in STATIC_FILES:
-        df = load_static_table(spark, data_dir, table)
-        wh.create_if_not_exists("bronze", table)
+
+    def load(table: str) -> int:
+        before = (wh.table("bronze", table).count()
+                  if wh.exists("bronze", table) else 0)
+        df, obs = observed(load_static_table(spark, data_dir, table),
+                           f"append:bronze.{table}", n=F.count(F.lit(1)))
         wh.append("bronze", table, df)
-        counts[table] = wh.table("bronze", table).count()
-    return counts
+        return before + obs.get["n"]
+
+    return dict(zip(STATIC_FILES, run_concurrently(
+        spark, [partial(load, table) for table in STATIC_FILES])))
